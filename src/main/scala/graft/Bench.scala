@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * So each query is (1) plan-warmed at sf0.001, (2) executed once
   * untimed at the TARGET sf, then (3) timed on a second target-sf
   * pass. The reported per-query number is the warm pass — reproducible
-  * within the run-to-run noise of an isolated BenchOne run. The cold
+  * within the run-to-run noise of an isolated single-query run. The cold
   * (first target-sf) pass total is kept as "cold_total" so scan-cache
   * effects stay visible.
   *
@@ -35,7 +35,7 @@ object Bench {
   private[graft] val DegradedFactor = 1.5
 
   /** Pinned wall-clock of one [[calibrateBandwidth]] reading on the
-    * same healthy close host (median of repeated ProbeCal readings,
+    * same healthy close host (median of repeated readings,
     * committed round 13). Complements the register-only FP kernel:
     * round 12's official close shipped a 5.5×-inflated fleet lane
     * with CLEAN FP brackets — the interference stole memory
@@ -239,6 +239,18 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble)
       .toMap
 
+  /** Anchors are wall-clock readings AT A CORE COUNT, so they certify
+    * a run only when the anchors file's top-level `"cpus"` equals the
+    * run's. A file without that field certifies nothing: its core
+    * count is unknown. Nested objects are flat (see [[extractObject]]),
+    * so blanking them leaves only top-level fields.
+    */
+  private[graft] def anchorCpusMatch(anchorsJson: String, cpus: Int): Boolean = {
+    val top = anchorsJson.trim.stripPrefix("{").stripSuffix("}").replaceAll("""\{[^{}]*\}""", "{}")
+    """"cpus"\s*:\s*"?([0-9]+)"?""".r.findFirstMatchIn(top)
+      .exists(_.group(1).toIntOption.contains(cpus))
+  }
+
   /** History-anchored sanity check: per-query ratio of `current` to
     * the last committed clean close. Returns (suite median ratio,
     * suspects) where a query is suspect when it runs more than
@@ -386,10 +398,9 @@ object Bench {
     // purely because the anchor was recorded at 32 cores. Anchor
     // certification only applies when the run's core count matches
     // the anchors file's; a scaling probe is not a dirty lane.
-    val benchCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val anchorCpusMatch = """"cpus"\s*:\s*"?([0-9]+)"?""".r
-      .findFirstMatchIn(anchorsJson).map(_.group(1)).forall(_ == benchCpus)
-    val anchorsApply = anchorSfMatch && anchorCpusMatch
+    val benchCpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).getOrElse(32)
+    val anchorCpus = anchorCpusMatch(anchorsJson, benchCpus)
+    val anchorsApply = anchorSfMatch && anchorCpus
     val queryAnchors =
       if (anchorsApply) parseNumericFields(extractObject(anchorsJson, "queries"))
       else Map.empty[String, Double]
@@ -458,7 +469,7 @@ object Bench {
     val suiteDegraded = dirtyWindows > 0 ||
       streamJson.contains("\"degraded\":true") || scaleJson.contains("\"degraded\":true")
     val anchorsObj =
-      s"""{"sf_match":$anchorSfMatch,"cpus_match":$anchorCpusMatch,""" +
+      s"""{"sf_match":$anchorSfMatch,"cpus_match":$anchorCpus,""" +
         f""""suite_median_ratio":$suiteRatio%.4f,""" +
         s""""suspects":${suspects.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""anchor_retimed":${anchorRetimed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
@@ -656,8 +667,8 @@ object Bench {
       // Stream shuffle partitions sized to the state volume, as any
       // real deploy would: each stream partition carries a state
       // store whose per-batch open/commit cost is fixed, and at this
-      // corpus size 32 stores are machinery, not work — StreamProbe
-      // round 13 measured 1182 docs/s at 32 partitions vs 3340 at 8
+      // corpus size 32 stores are machinery, not work — round 13
+      // measured 1182 docs/s at 32 partitions vs 3340 at 8
       // with identical results (the r10→r12 "lost throughput" was
       // exactly this, not the null-band guard or TTL state). The
       // partition count pins at first checkpoint, so it is set before

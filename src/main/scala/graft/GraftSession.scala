@@ -30,17 +30,18 @@ object GraftSession {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // ensure, not register: getOrCreate returns the SAME session to
-    // every caller in a JVM (every test suite, every probe main), and
+    // every caller in a JVM (every test suite, every harness main), and
     // re-registering ~40 functions logs a WARN per function per
     // caller — thousands of "replaced a previously registered
     // function" lines per test run for zero work
     graft.functions.GraftFunctions.ensure(spark)
     // the engine's Catalyst rewrites, active by default (the cluster
     // deploy path is spark.sql.extensions=graft.functions.GraftExtensions;
-    // local sessions get the same rules here): naive abs-range and
-    // point-in-interval joins become bucketed equi-joins
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.RangeJoinRule, graft.plans.IntervalJoinRule)
+    // local sessions get the same rules here). Not `.withExtensions`:
+    // getOrCreate returns an existing session without applying them,
+    // and extraOptimizations run in a different optimizer batch than
+    // injected rules, which the plan contracts in PlanSpec are pinned to
+    spark.experimental.extraOptimizations = graft.functions.GraftFunctions.rules
     spark
   }
 }

@@ -279,9 +279,11 @@ object Pipeline {
     val capacity = if (n > 0) days(0).capacity else Double.NaN
     val errs = scala.collection.mutable.ArrayBuffer.empty[String]
 
+    // NonFatal: an OOM or an interrupt must abort the run, not become
+    // one site's error string
     def stage[A](name: String, default: A)(f: => A): A =
       try { faultInjector(name); f }
-      catch { case e: Throwable => errs += s"$name: ${e.getMessage}"; default }
+      catch { case scala.util.control.NonFatal(e) => errs += s"$name: ${e.getMessage}"; default }
 
     // data quality: density fit (tl1_l2d2p365 analog) + flags
     val quality = stage("quality", Double.NaN) {

@@ -188,8 +188,8 @@ object Quantiles {
     * through FINITENESS and grain, never through its bits). Fitting
     * only the requested tau skips ~2/3 of the IRLS work and the
     * Viterbi pass (optimization round 13; same-JVM interleaved A/B at
-    * sf0.1/40 bins: 2.9–3.1 s → 2.2–2.3 s warm, ProbeTau). The
-    * fitted values differ from the 3-tau path in the IRLS convergence
+    * sf0.1/40 bins: 2.9–3.1 s → 2.2–2.3 s warm, OPTIMIZATION_r13.md).
+    * The fitted values differ from the 3-tau path in the IRLS convergence
     * tail only when IRLS converges inside the iteration cap (the
     * 3-tau path warm-starts each tau from the previous one's
     * coefficients, the single-tau path cold-starts from the LS fit —

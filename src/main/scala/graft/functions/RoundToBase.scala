@@ -1,8 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expression: round `x` to the nearest multiple of
@@ -76,73 +79,37 @@ object GraftFunctions {
   def ensure(spark: SparkSession): Unit =
     if (registered.put(spark, java.lang.Boolean.TRUE) == null) register(spark)
 
+  /** Every graft SQL function, listed once: (name, expression class,
+    * builder). [[register]] and [[GraftExtensions]] both iterate it.
+    */
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_round_to_base", classOf[RoundToBase], build),
+    ("graft_dot", classOf[ArrayDot], ArrayDot.buildDot),
+    ("graft_dist2", classOf[ArrayDist2], ArrayDot.buildDist2),
+    ("graft_rolling_hashes", classOf[RollingHashes], buildRollingHashes),
+    ("graft_bloom_contains", classOf[BloomContains], buildBloomContains),
+    ("graft_deflate_ratio", classOf[DeflateRatio], buildDeflateRatio),
+    ("graft_lsh_band_sigs", classOf[LshBandSigs], buildLshBandSigs),
+    ("graft_barrier", classOf[graft.plans.PredicateBarrier], buildBarrier),
+    ("graft_dup_ngram_frac", classOf[DupNgramFrac], buildDupNgramFrac),
+    ("graft_stopword_ratio", classOf[StopwordRatio], buildStopwordRatio),
+    ("graft_alpha_word_frac", classOf[AlphaWordFrac], buildAlphaWordFrac),
+    ("graft_rolling_minhash_sig", classOf[RollingMinhashSig], buildRollingMinhashSig),
+    ("graft_double_order_bits", classOf[DoubleOrderBits], buildDoubleOrderBits)
+  )
+
+  /** The engine's Catalyst rewrites: naive abs-range joins and
+    * point-in-interval band joins become bucketed equi-joins.
+    * `GraftSession.local` installs them as `extraOptimizations`;
+    * [[GraftExtensions]] injects them as optimizer rules.
+    */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(graft.plans.RangeJoinRule, graft.plans.IntervalJoinRule)
+
   def register(spark: SparkSession): Unit = {
     registered.put(spark, java.lang.Boolean.TRUE)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_round_to_base",
-      build,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      ArrayDot.buildDot,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dist2",
-      ArrayDot.buildDist2,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hashes",
-      buildRollingHashes,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      buildBloomContains,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deflate_ratio",
-      buildDeflateRatio,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_band_sigs",
-      buildLshBandSigs,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_barrier",
-      buildBarrier,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dup_ngram_frac",
-      buildDupNgramFrac,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_stopword_ratio",
-      buildStopwordRatio,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_alpha_word_frac",
-      buildAlphaWordFrac,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_minhash_sig",
-      buildRollingMinhashSig,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_double_order_bits",
-      buildDoubleOrderBits,
-      "built-in"
-    )
+    functions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   def buildDoubleOrderBits(exprs: Seq[Expression]): Expression =
@@ -192,89 +159,11 @@ object GraftFunctions {
 /** `SparkSessionExtensions` hook: `.withExtensions(new GraftExtensions)`
   * or `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_round_to_base"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[RoundToBase].getName, "graft_round_to_base"),
-        (exprs: Seq[Expression]) => GraftFunctions.build(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ArrayDot].getName, "graft_dot"),
-        (exprs: Seq[Expression]) => ArrayDot.buildDot(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dist2"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ArrayDist2].getName, "graft_dist2"),
-        (exprs: Seq[Expression]) => ArrayDot.buildDist2(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_rolling_hashes"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[RollingHashes].getName, "graft_rolling_hashes"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildRollingHashes(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_contains"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[BloomContains].getName, "graft_bloom_contains"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildBloomContains(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_deflate_ratio"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DeflateRatio].getName, "graft_deflate_ratio"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildDeflateRatio(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_band_sigs"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[LshBandSigs].getName, "graft_lsh_band_sigs"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildLshBandSigs(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_barrier"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[graft.plans.PredicateBarrier].getName, "graft_barrier"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildBarrier(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dup_ngram_frac"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DupNgramFrac].getName, "graft_dup_ngram_frac"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildDupNgramFrac(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_stopword_ratio"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[StopwordRatio].getName, "graft_stopword_ratio"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildStopwordRatio(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_alpha_word_frac"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[AlphaWordFrac].getName, "graft_alpha_word_frac"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildAlphaWordFrac(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_rolling_minhash_sig"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[RollingMinhashSig].getName, "graft_rolling_minhash_sig"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildRollingMinhashSig(exprs))
-    )
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_double_order_bits"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DoubleOrderBits].getName, "graft_double_order_bits"),
-        (exprs: Seq[Expression]) => GraftFunctions.buildDoubleOrderBits(exprs))
-    )
-    // nearest-ts range joins written naively become bucketed equi-joins
-    e.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
-    // naive point-in-interval band joins become the IntervalJoin plan
-    e.injectOptimizerRule(_ => graft.plans.IntervalJoinRule)
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit = {
+    GraftFunctions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
+    GraftFunctions.rules.foreach(rule => e.injectOptimizerRule(_ => rule))
   }
 }

@@ -316,6 +316,9 @@ object LangModel {
     * @return (rk, w, cnt, coverage, n_types)
     */
   def vocabFromCounts(counts: DataFrame, topK: Int): DataFrame = {
+    // the prefix sums below are O(topK²) work inside ONE task (the top
+    // rows are packed into a single array), so topK is bounded
+    require(topK >= 1 && topK <= 1000, s"vocabFromCounts needs 1 <= topK <= 1000, got topK=$topK")
     val total = counts.agg(sum(col("cnt")).as("total"), count(lit(1)).as("n_types"))
     val top = counts.orderBy(col("cnt").desc, col("w").asc).limit(topK)
     top

@@ -65,11 +65,11 @@ object Kernels {
       // same criterion quantileFourierFitMultiTaus has carried since
       // round 13 (optimization round 14 brings this single-tau kernel
       // in line): a converged IRLS re-solves the identical weighted
-      // system, so the remaining iterations were pure waste. This
-      // kernel backs the SunriseSunset threshold optimizer (21
-      // thresholds x 2 curves per site = 44 fits), which no declared
-      // query consumes (q55 gates stage A only) — it is spec-gated
-      // with ~10x tolerance margins.
+      // system, so the remaining iterations were pure waste. Its
+      // consumers: the hash-gated q72 (`SparkEntry.q72`, 30-iteration
+      // cap), the p01 fleet fits in `analyses.Pipeline.analyzeSite`
+      // (quality, clear and clearsky stages), and the `SunriseSunset`
+      // threshold optimizer (21 thresholds x 2 curves per site).
       var d = 0.0
       var a = 0
       while (a < p) {

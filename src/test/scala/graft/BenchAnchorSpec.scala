@@ -102,4 +102,26 @@ class BenchAnchorSpec extends AnyFunSuite {
     assert(lanes.keySet == Set("single_site_sec", "fleet16_sec", "stream_docs_per_sec"))
     assert(qs.values.forall(v => v > 0 && v < 60), "anchor medians must be sane seconds")
   }
+
+  test("anchorCpusMatch: a missing top-level cpus field certifies nothing") {
+    assert(!Bench.anchorCpusMatch("""{"sf": "/x/sf0.1", "queries": {"p01": 4.8}}""", 32))
+    assert(!Bench.anchorCpusMatch("", 32))
+    // a nested "cpus" key is not the file's core count
+    assert(!Bench.anchorCpusMatch("""{"sf": "/x", "queries": {"cpus": 32}}""", 32))
+  }
+
+  test("anchorCpusMatch: the anchors' core count must equal the run's") {
+    val json = """{"sf": "/x/sf0.1", "cpus": 32, "lanes": {"fleet16_sec": 8.45}}"""
+    assert(Bench.anchorCpusMatch(json, 32))
+    assert(!Bench.anchorCpusMatch(json, 8))
+    assert(Bench.anchorCpusMatch("""{"cpus":"8"}""", 8))
+  }
+
+  test("committed anchors file was recorded at 32 cores") {
+    val p = java.nio.file.Paths.get("bench/anchors.json")
+    assume(java.nio.file.Files.exists(p))
+    val json = java.nio.file.Files.readString(p)
+    assert(Bench.anchorCpusMatch(json, 32))
+    assert(!Bench.anchorCpusMatch(json, 8))
+  }
 }

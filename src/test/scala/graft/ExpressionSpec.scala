@@ -257,4 +257,14 @@ class ExpressionSpec extends AnyFunSuite {
       .filter(col("b").isNotNull).count()
     assert(bands == 4, "exactly the non-null doc's 4 bands must survive")
   }
+
+  test("every function in the registry table resolves in GraftSession.local's session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = GraftFunctions.functions.map(_._1)
+    assert(names.distinct.size == names.size, s"a function is listed twice: $names")
+    names.foreach { name =>
+      assert(spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name)),
+        s"$name is not registered")
+    }
+  }
 }

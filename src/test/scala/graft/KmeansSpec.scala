@@ -211,4 +211,14 @@ class KmeansSpec extends AnyFunSuite {
       .select(col("sil")).collect().map(_.getDouble(0))
     assert(degen.forall(_ == 0.0), "identical centroids must score 0 everywhere")
   }
+
+  test("a failing training pass still releases the cached projection") {
+    val vectors = spark.range(16).select(col("id"),
+      expr("if(id >= 0, raise_error('injected vector fault'), array(1D, 2D))").as("vec"))
+    intercept[Exception](Similarity.kmeansFit(vectors, "id", "vec", k = 2, iters = 2))
+    // the same projection kmeansFit persists: the cache lookup is by plan
+    val projection = vectors.select(col("id"), col("vec").cast("array<double>").as("vv"))
+    assert(projection.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the persisted projection leaked past the failed fit")
+  }
 }

@@ -200,4 +200,15 @@ class LangModelSpec extends AnyFunSuite {
     assert(scores(101L) < 0, s"crawl-dialect probe scored ${scores(101L)}")
     assert(scores(100L) > scores(101L))
   }
+
+  test("vocabFromCounts bounds topK: 0 and 1001 are rejected, 20 still ranks") {
+    import spark.implicits._
+    val counts = Seq(("a", 3L), ("b", 2L), ("c", 1L)).toDF("w", "cnt")
+    Seq(0, 1001).foreach { k =>
+      intercept[IllegalArgumentException](LangModel.vocabFromCounts(counts, k))
+    }
+    val top = LangModel.vocabFromCounts(counts, 20).orderBy("rk").collect()
+    assert(top.map(_.getAs[String]("w")).toSeq == Seq("a", "b", "c"))
+    assert(top.last.getAs[Double]("coverage") == 1.0)
+  }
 }

@@ -74,4 +74,20 @@ class PipelineFaultSpec extends AnyFunSuite {
         s"site $s perturbed by the poisoned site:\nclean  ${clean(s)}\nfaulty ${faulty(s)}")
     }
   }
+
+  test("a fatal fault (interrupt) escapes analyzeSite; a non-fatal one lands in errors") {
+    val days = Array.tabulate(40) { i =>
+      graft.analyses.DayRow(site = 7L, dayIdx = i.toDouble, energy = 5.0 + math.sin(i / 3.0),
+        density = 0.9, dailyMax = 1.0, comHour = 12.0, nObs = 96L, capacity = 1.0,
+        smoothness = 0.1)
+    }
+    def faultAt(e: Exception): String => Unit = name => if (name == "quality") throw e
+    val report = Pipeline.analyzeSite(7L, days,
+      faultInjector = faultAt(new IllegalStateException("injected quality fault")))
+    assert(report.errors.contains("quality") && report.qualityScore.isNaN,
+      s"a non-fatal stage fault must be recorded: '${report.errors}'")
+    intercept[InterruptedException] {
+      Pipeline.analyzeSite(7L, days, faultInjector = faultAt(new InterruptedException("injected")))
+    }
+  }
 }
